@@ -1,11 +1,25 @@
 """Jaccard set-similarity join — Spark-native implementation.
 
 Re-expresses the reference's prefix-filtered join pipeline
-(``py_duckdb/similarity_join/join/jaccard_join.py``) as a lazy
-DataFrame chain: tokenize → document frequency → position window →
+(``py_duckdb/similarity_join/join/jaccard_join.py``, ``do_join`` at
+65-73) as a lazy DataFrame chain, ONE pipeline for both joins:
+tokenize → document frequency → token table (``pos`` window) →
 candidate join (length + prefix + positional filters) → suffix
-verification. The brute-force variant (the correctness oracle) is
-explode → equi-join → groupBy → threshold filter.
+verification. The joins differ only in what they feed it:
+
+- :func:`jaccard_self_join` indexes and probes one token table (plain
+  doc frequency; the pair key ``l_id`` orders each pair once);
+- :func:`jaccard_inner_join` builds one table per side over the
+  cross-table product df (widow placeholder, per-side heavy-hitter
+  split) and swaps sides by widow count, as ``_JaccardInnerJoin`` does.
+
+The shared stages are :func:`_plan_from_dfreq` (dfreq statistics:
+bitset gate, hot split), :func:`_token_table`, :func:`_gate_stats`
+(broadcast gate and duplicate-row count), :func:`_candidates` and
+:func:`_verify` (one copy each of the bitset, array-intersect and
+three-way verification), chained by :func:`_prefix_filter_join`. The
+brute-force variant (the correctness oracle) is explode → equi-join →
+groupBy → threshold filter.
 
 Math (SURVEY.md §0): for token sets x, y and threshold t,
 ``J(x,y) >= t  <=>  |x∩y| >= (|x|+|y|) * t / (1+t)``.
@@ -25,29 +39,35 @@ Parity hazards preserved (SURVEY.md §4.3):
   ``pos >= maxPos`` and adds ``pfxOverlap - 1``
   (``jaccard_join.py:172-183``).
 - Output is a pair table only — no similarity column
-  (``jaccard_join.py:174-175``). See :mod:`..operators.dedup` for
-  scored variants beyond the reference surface.
+  (``jaccard_join.py:174-175``) unless ``with_score``. See
+  :mod:`..operators.dedup` for scored variants beyond the reference
+  surface.
 
 Scale design (100 TB target):
 - All stages are shuffles on high-cardinality keys (token, id) —
-  no driver-side materialization of row data; only the inner join's
-  side-selection reads four scalar counts (as the reference does).
-- ``tkdf`` is persisted (MEMORY_AND_DISK) because candidates and
-  verification each scan it twice.
+  no driver-side materialization of row data; the driver reads only
+  scalars: one dfreq aggregate and one gate-stats aggregate per join
+  (the inner join's widow counts for the side swap ride on the latter).
+- Token frames, dfreq and the token tables are persisted
+  (MEMORY_AND_DISK): the plan decisions, candidates and verification
+  each scan them.
 - Single-side conjuncts of the candidate join (prefix filters) are
   applied as pre-join filters, shrinking shuffle input; the hot-token
-  skew inherent to token equi-joins is handled by AQE skew-join
-  splitting (enabled in :mod:`..session`).
-- The doc-frequency join (tokens ⋈ df-per-token) is left to AQE to
-  broadcast when small; at 100 TB the df table is itself large and
-  the shuffle join on ``token`` is the right plan.
+  skew of the tokens ⋈ dfreq build join is split by broadcasting the
+  heavy hitters (:func:`tokens_with_doc_freq`), the rest left to AQE.
+- Verification attach tables broadcast only when a size cap AND the
+  candidate-bound benefit ratio clear (:func:`_verify_attach`); at
+  corpus scale the shuffle join stays.
 """
 
 from __future__ import annotations
 
+import operator
 import re
 from decimal import Decimal
 from fractions import Fraction
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -317,48 +337,95 @@ def tokens_with_doc_freq(
         dfreq = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     if hot_df_threshold == "auto":
         dfreq = dfreq.persist(StorageLevel.MEMORY_AND_DISK)
+        stats = _dfreq_stats(dfreq)
         if stats_out is not None:
-            stats_out["dfreq"] = dfreq
-        # One aggregate, triple duty: N and max(df) drive the hot
-        # split; sum(df²) is a sound UPPER bound on the broadcast
-        # gate's candidate bound (per token, indexing-prefix rows ×
-        # probing-prefix rows <= df², summed), exported via
-        # ``stats_out`` so sparse corpora can skip the exact
-        # gate-stats job entirely (double: immune to long overflow
-        # at corpus scale; it only feeds a threshold comparison).
-        row = dfreq.agg(
-            F.sum("df").alias("n"),
-            F.max("df").alias("m"),
-            F.sum((F.col("df") * F.col("df")).cast("double")).alias("sq"),
-        ).first()
-        n_tok, max_df = int(row["n"] or 0), int(row["m"] or 0)
-        if stats_out is not None:
-            stats_out.update(
-                n_tok=n_tok, max_df=max_df, sumsq=float(row["sq"] or 0.0)
-            )
+            stats_out.update(dfreq=dfreq, **stats)
         hot_df_threshold = _auto_hot_threshold(
-            n_tok, max_df, _shuffle_partitions(tokens)
+            stats["n_tok"], stats["max_df"], _shuffle_partitions(tokens)
         )
-    if hot_df_threshold:
-        thr = int(hot_df_threshold)
-        hot = dfreq.filter(F.col("df") >= thr)
-        hot_tokens = F.broadcast(hot.select("token"))
+    return _token_table(
+        tokens, dfreq, hot_thr=hot_df_threshold, pair_key=with_pair_key
+    )
+
+
+def _dfreq_stats(dfreq: DataFrame, side_dfs: tuple[str, ...] = ("df",)) -> dict:
+    """ONE aggregate over the (persisted) doc-frequency table, four
+    scalars: ``vocab`` (distinct tokens, the bitset gate), ``n_tok`` (token
+    rows) and ``max_df`` (the hottest token's rows on one side) for the
+    heavy-hitter split, and ``sumsq``: per token the product of its
+    side dfs (df² for a self join, l_df × r_df across two tables),
+    summed — a sound UPPER bound on the broadcast gate's candidate
+    bound (indexing-prefix rows × probing-prefix rows <= that product),
+    so a sparse self join can skip the exact gate-stats job entirely
+    (double: immune to long overflow at corpus scale; it only feeds a
+    threshold comparison). ``side_dfs`` names the per-side df columns:
+    one for a self join, two (NULL where the token is absent from that
+    side) for a two-table join."""
+    sides = [F.coalesce(F.col(c), F.lit(0)) for c in side_dfs]
+    row = dfreq.agg(
+        F.count(F.lit(1)).alias("v"),
+        F.sum(reduce(operator.add, sides)).alias("n"),
+        F.max(F.greatest(*sides) if len(sides) > 1 else sides[0]).alias("m"),
+        F.sum((sides[0] * sides[-1]).cast("double")).alias("sq"),
+    ).first()
+    return {
+        "vocab": int(row["v"] or 0),
+        "n_tok": int(row["n"] or 0),
+        "max_df": int(row["m"] or 0),
+        "sumsq": float(row["sq"] or 0.0),
+    }
+
+
+def _token_table(
+    tokens: DataFrame,
+    dfreq: DataFrame,
+    *,
+    n_words: int = 0,
+    hot_thr: int | None = None,
+    hot_col: str = "df",
+    pair_key: bool = False,
+) -> DataFrame:
+    """tokens ⋈ dfreq → ``(id, len, token, df[, tid], pos[, l_id])``,
+    the token table both joins and :func:`tokens_with_doc_freq` build.
+
+    Three build plans, identical rows:
+    - ``n_words`` (bitset verification): dfreq gains ``tid``, the
+      token's 1-based rank in the global ``(df, token)`` order — the
+      SAME total order the ``pos`` window uses, so within a document
+      ``pos`` is increasing in ``tid`` — and broadcasts wholesale (the
+      build join is map-side and skew-free). The rank window runs
+      unpartitioned over the token dim: sound only because the gate
+      caps the vocabulary at ``_MAX_BITSET_VOCAB``.
+    - ``hot_thr``: the heavy-hitter split (see
+      :func:`tokens_with_doc_freq`). A token is hot iff its
+      ``hot_col`` df clears the threshold — a two-table join passes
+      each side's own df column, since that side's rows are what pile
+      into one partition of its build join.
+    - otherwise the plain shuffle join.
+    ``pair_key`` adds the self join's ``l_id = concat(len, '_', id)``.
+    """
+    dim = dfreq.select("token", "df")
+    cols = ["id", "len", "token", "df"]
+    if n_words:
+        dim = dim.withColumn(
+            "tid", F.row_number().over(Window.orderBy("df", "token"))
+        )
+        joined = tokens.join(F.broadcast(dim), "token")
+        cols.append("tid")
+    elif hot_thr:
+        hot_rows = F.coalesce(F.col(hot_col), F.lit(0)) >= F.lit(int(hot_thr))
+        hot = dfreq.filter(hot_rows).select("token", "df")
+        cold = dfreq.filter(~hot_rows).select("token", "df")
         joined = (
-            tokens.join(hot_tokens, "token", "left_anti")
-            .join(dfreq.filter(F.col("df") < thr), "token")
+            tokens.join(F.broadcast(hot.select("token")), "token", "left_anti")
+            .join(cold, "token")
             .unionByName(tokens.join(F.broadcast(hot), "token"))
         )
     else:
-        joined = tokens.join(dfreq, "token")
+        joined = tokens.join(dim, "token")
     w = Window.partitionBy("id").orderBy("df", "token")
-    out = joined.select(
-        "id",
-        "len",
-        "token",
-        F.col("df"),
-        F.row_number().over(w).alias("pos"),
-    )
-    if with_pair_key:
+    out = joined.select(*cols, F.row_number().over(w).alias("pos"))
+    if pair_key:
         out = out.withColumn(
             "l_id",
             F.concat(
@@ -378,8 +445,6 @@ def tokens_with_doc_freq(
 # arrays (measured: 5-gram sf0.1 verify 8.7s → 6.3s when the 2333-token
 # vocab moved from the array path to 37-word bitsets).
 _MAX_BITSET_VOCAB = 4096
-# rows probed by the cheap pre-gate before the exact vocabulary count
-_VOCAB_PROBE_ROWS = 50_000
 
 # Verification-side broadcast gate (round 8). The verification attach
 # tables are ONE ROW PER DOCUMENT (pos-ordered token arrays, bitsets,
@@ -405,9 +470,8 @@ _MAX_BROADCAST_VERIFY_DOCS = 250_000
 # from shuffling is orders of magnitude larger). Measured at the
 # refscale inner stress cell (db100 t=0.3, 82M candidates, 692K-row
 # token tables): 508 s → 119 s, identical rows. Token counts come out
-# of the fused gate-stats aggregate over the PERSISTED tkdf — when
-# the caller opts out of persist, the scalars would recompute the
-# tokenize chain, so the gate is skipped and the shuffle join kept.
+# of the fused gate-stats aggregate over the persisted tkdf
+# (_gate_stats).
 _MAX_BROADCAST_VERIFY_TOKENS = 2_000_000
 # Serialized-size budget for ONE broadcast attach table. The row-count
 # caps above assume token-level widths (~30 B/row → ~60 MB at 2M rows);
@@ -479,62 +543,102 @@ _BROADCAST_VERIFY_MIN_RATIO = 4
 # vs 7.6 s floor-off — the fused stats job on a persisted <=250K-doc
 # tkdf costs well under a second and the ratio gate earns it back).
 # The bound-ratio gate (_BROADCAST_VERIFY_MIN_RATIO) is itself the
-# density test, so it decides alone whenever docs <= the size cap and
-# tkdf is persisted (unpersisted frames still skip the stats job: the
-# scalars would recompute the tokenize chain).
+# density test, so it decides alone whenever docs <= the size cap.
 
 
-def _self_gate_stats(
-    tkdf: DataFrame, t: float, skip_dup: bool = False
-) -> tuple[int, int, int, int]:
-    """``(n_docs, n_tok, cand_bound, dup_rows)`` for the self-join
-    broadcast gate, in ONE aggregate job over the persisted token
-    table (no separate doc count / token count jobs): per token, ``a``
-    rows in the indexing prefix × ``b`` rows in the probing prefix
-    bounds the candidate equi-join's output; ``pos == 1`` rows count
-    documents exactly (every tokenized doc has one); ``dup_rows``
-    (rows minus distinct ids, summed over tokens) is the exact count
-    of duplicate ``(id, token)`` rows, gating the runtime-distinct
-    array verification (_RUNTIME_DISTINCT_ARRAY) on the same job.
-    ``skip_dup`` (round 12): a ``rows_distinct`` tokenizer takes the
-    array verification unconditionally, so its caller skips the
-    per-token ``count_distinct`` — the only hash-set aggregate in the
-    job; everything else is plain compiled sums — and gets the known
-    ``dup_rows = 0``."""
+class _GateStats(NamedTuple):
+    """Broadcast-gate scalars of one join, per side in input order."""
+
+    docs: tuple[int, ...]  # documents (every tokenized doc has pos == 1)
+    toks: tuple[int, ...]  # token rows
+    widows: tuple[int, ...]  # indexing-prefix rows of side-only tokens
+    # bound[i][j]: sum over tokens of side i's indexing-prefix rows ×
+    # side j's probing-prefix rows — bounds the candidate equi-join
+    # with i indexing and j probing
+    bound: tuple[tuple[int, ...], ...]
+    dup_rows: int  # duplicate (id, token) rows over all sides; -1 unknown
+
+
+def _gate_stats(
+    tkdfs: list[DataFrame],
+    t: float,
+    *,
+    skip_dup: bool = False,
+    widow_df: int | None = None,
+) -> _GateStats:
+    """Every broadcast-gate scalar of a join in ONE aggregate job over
+    its persisted token tables — one table for a self join, the two
+    sides for a two-table join (side-tagged and unioned, so both are
+    read in a single job: a driver scheduling round-trip saved per call,
+    the fixed floor that dominates small joins).
+
+    Per token, per side: rows ``c``, documents ``d`` (``pos == 1``),
+    indexing-prefix rows ``a`` and probing-prefix rows ``b``;
+    ``bound[i][j] = Σ a_i × b_j``. ``dup_rows`` (rows minus distinct
+    ``(side, id)`` per token, summed) is the exact duplicate-row count
+    gating the runtime-distinct array verification
+    (_RUNTIME_DISTINCT_ARRAY). ``skip_dup`` (round 12): a
+    ``rows_distinct`` tokenizer takes the array verification
+    unconditionally, so its caller skips the ``count_distinct`` — the
+    only hash-set aggregate in the job; everything else is plain
+    compiled sums — and gets the known ``dup_rows = 0``. ``widow_df``
+    (two-table join): the placeholder df of tokens present on one side
+    only; ``widows`` counts their indexing-prefix rows per side — the
+    reference's side-swap decision (jaccard_join.py:324-351)."""
     idx = _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
     prb = _probing_prefix_cond(F.col("len"), F.col("pos"), t)
-    dup_cols = [] if skip_dup else [F.count_distinct("id").alias("u")]
-    dup_agg = (
-        [] if skip_dup else [F.sum(F.col("c") - F.col("u")).alias("dup_rows")]
+    sides = range(len(tkdfs))
+    tagged = reduce(
+        DataFrame.unionByName,
+        [
+            tk.select(F.lit(i).alias("side"), "id", "token", "len", "pos", "df")
+            for i, tk in enumerate(tkdfs)
+        ],
     )
-    row = (
-        tkdf.groupBy("token")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.sum(idx.cast("long")).alias("a"),
-            F.sum(prb.cast("long")).alias("b"),
-            F.sum((F.col("pos") == 1).cast("long")).alias("d"),
-            *dup_cols,
-        )
-        .agg(
-            F.sum("d").alias("n_docs"),
-            F.sum("c").alias("n_tok"),
-            F.sum(F.col("a") * F.col("b")).alias("bound"),
-            *dup_agg,
-        )
-        .first()
-    )
+    per_side = {
+        "c": F.lit(True),
+        "d": F.col("pos") == 1,
+        "a": idx,
+        "b": prb,
+    }
+    if widow_df is not None:
+        per_side["w"] = idx & (F.col("df") == widow_df)
+    per_token = [
+        F.sum(((F.col("side") == i) & cond).cast("long")).alias(f"{k}{i}")
+        for k, cond in per_side.items()
+        for i in sides
+    ]
+    totals = [
+        F.sum(f"{k}{i}").alias(f"{k}{i}")
+        for k in per_side
+        if k not in ("a", "b")
+        for i in sides
+    ] + [
+        F.sum(F.col(f"a{i}") * F.col(f"b{j}")).alias(f"s{i}{j}")
+        for i in sides
+        for j in sides
+    ]
+    if not skip_dup:
+        per_token += [
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct("side", "id").alias("u"),
+        ]
+        totals.append(F.sum(F.col("n") - F.col("u")).alias("dup"))
+    row = tagged.groupBy("token").agg(*per_token).agg(*totals).first()
+
+    def get(name: str) -> int:
+        return int(row[name] or 0)
+
     if skip_dup:
         dup_rows = 0
     else:
-        dup_rows = int(
-            row["dup_rows"] if row["dup_rows"] is not None else -1
-        )
-    return (
-        int(row["n_docs"] or 0),
-        int(row["n_tok"] or 0),
-        int(row["bound"] or 0),
-        dup_rows,
+        dup_rows = -1 if row["dup"] is None else int(row["dup"])
+    return _GateStats(
+        docs=tuple(get(f"d{i}") for i in sides),
+        toks=tuple(get(f"c{i}") for i in sides),
+        widows=tuple(get(f"w{i}") if widow_df is not None else 0 for i in sides),
+        bound=tuple(tuple(get(f"s{i}{j}") for j in sides) for i in sides),
+        dup_rows=dup_rows,
     )
 
 
@@ -588,38 +692,6 @@ def _verify_attach(
         return per_doc
     return F.broadcast(per_doc)
 
-
-def _tokens_with_tid(
-    tokens: DataFrame, dfreq: DataFrame | None = None
-) -> DataFrame:
-    """tokens → ``(id, len, token, df, tid, pos, l_id)`` where ``tid``
-    is the token's 1-based rank in the global ``(df, token)`` order —
-    the SAME total order the ``pos`` window uses, so within a document
-    ``pos`` is increasing in ``tid`` and the suffix condition
-    ``pos >= maxPos`` is equivalent to ``tid >= tid_at_maxPos``.
-
-    The rank window runs unpartitioned over the aggregated token dim —
-    sound only because callers gate on ``vocab <= _MAX_BITSET_VOCAB``.
-    """
-    if dfreq is None:
-        dfreq = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    tdim = dfreq.withColumn(
-        "tid", F.row_number().over(Window.orderBy("df", "token"))
-    )
-    w = Window.partitionBy("id").orderBy("df", "token")
-    return tokens.join(F.broadcast(tdim), "token").select(
-        "id",
-        "len",
-        "token",
-        "df",
-        "tid",
-        F.row_number().over(w).alias("pos"),
-        F.concat(
-            F.col("len").cast("string"),
-            F.lit("_"),
-            F.col("id").cast("string"),
-        ).alias("l_id"),
-    )
 
 
 def _doc_bitsets(tk: DataFrame, n_words: int) -> DataFrame:
@@ -697,15 +769,14 @@ def _jaccard_score(
     ).alias("jaccard")
 
 
-def _score_cols(with_score: bool, ll: str = "llen", rl: str = "rlen"):
-    """Optional ``jaccard`` output column for the filtered-join final
-    selects, which all expose ``sfx``/``pfxoverlap`` plus the two len
-    columns (named per path)."""
+def _score_cols(with_score: bool) -> list[Column]:
+    """Optional ``jaccard`` output column for the pipeline's final
+    select, over the verified ``sfx``/``pfxoverlap``/``llen``/``rlen``."""
     if not with_score:
         return []
     return [
         _jaccard_score(
-            F.col("sfx") + F.col("pfxoverlap") - 1, F.col(ll), F.col(rl)
+            F.col("sfx") + F.col("pfxoverlap") - 1, F.col("llen"), F.col("rlen")
         )
     ]
 
@@ -781,6 +852,214 @@ _RUNTIME_DISTINCT_ARRAY = True
 
 
 # --------------------------------------------------------------------------
+# the prefix-filter pipeline (reference do_join, jaccard_join.py:65-73)
+# --------------------------------------------------------------------------
+#
+# Both joins run one pipeline; they differ only in how they build and
+# orient their token tables. The self join indexes and probes one
+# table; the two-table join indexes the side with more widows
+# (jaccard_join.py:353) and probes the other.
+
+
+def _plan_from_dfreq(
+    dfreq: DataFrame,
+    side_dfs: tuple[str, ...],
+    rows_distinct: bool,
+    hot_df_threshold: int | str | None,
+    n_partitions: int,
+) -> tuple[dict, int, int | None]:
+    """``(dfreq stats, n_words, hot threshold)``: ONE eager aggregate
+    over the persisted doc-frequency table drives every plan decision
+    taken before the token tables exist. dfreq is the algorithm's own
+    required shuffle;
+    persisting it means the token-table builds reuse it, so the only
+    added cost is reading back the vocab-sized table once.
+
+    Bitset verification when the tokenizer promises distinct rows and
+    the vocabulary fits ``_MAX_BITSET_VOCAB`` (a document's token set is
+    then a few 64-bit words and suffix overlap a masked AND + popcount,
+    pure codegen — measured ~8x faster than per-pair array_intersect on
+    the dense q-gram corpus); the bitset build broadcasts dfreq
+    wholesale, so the heavy-hitter split is meaningless there and off.
+    Otherwise ``"auto"`` engages the split from the measured skew."""
+    stats = _dfreq_stats(dfreq, side_dfs)
+    n_words = 0
+    if rows_distinct and 0 < stats["vocab"] <= _MAX_BITSET_VOCAB:
+        n_words = (stats["vocab"] + 63) // 64
+        hot_df_threshold = None
+    elif hot_df_threshold == "auto":
+        hot_df_threshold = _auto_hot_threshold(
+            stats["n_tok"], stats["max_df"], n_partitions
+        )
+    return stats, n_words, hot_df_threshold
+
+
+class _Side(NamedTuple):
+    """One side of the pipeline: its persisted token table and the
+    gate's row counts for it (0 = unknown, which declines every
+    broadcast of its attach tables)."""
+
+    tkdf: DataFrame
+    docs: int
+    toks: int
+
+
+def _candidates(
+    R: DataFrame, S: DataFrame, pair_cond: Column, t: float, rank: str
+) -> DataFrame:
+    """Candidate generation (jaccard_join.py:148-166, 364-384): R's
+    indexing prefix ⋈ S's probing prefix on token, under ``pair_cond``
+    (written over the aliases ``R`` and ``S``) and the positional
+    filter. Single-side prefix conditions are applied pre-join —
+    identical predicate set to the reference's fused WHERE, but explicit
+    so the shuffle inputs shrink before the token equi-join.
+
+    One row per pair ``(lid, rid)`` (R's id, S's id) with the prefix
+    overlap and each side's largest matched ``rank`` (``lmax``,
+    ``rmax``): ``pos``, or ``tid`` on the bitset path, where within a
+    doc the max pos and the max tid pick the same token."""
+    Rp = R.filter(_indexing_prefix_cond(F.col("len"), F.col("pos"), t))
+    Sp = S.filter(_probing_prefix_cond(F.col("len"), F.col("pos"), t))
+    cond = (
+        (F.col("R.token") == F.col("S.token"))
+        & pair_cond
+        & _positional_cond(
+            F.col("R.len"), F.col("R.pos"), F.col("S.len"), F.col("S.pos"), t
+        )
+    )
+    return (
+        Rp.alias("R")
+        .join(Sp.alias("S"), cond)
+        .groupBy(F.col("R.id").alias("lid"), F.col("S.id").alias("rid"))
+        .agg(
+            F.max(f"R.{rank}").alias("lmax"),
+            F.max(f"S.{rank}").alias("rmax"),
+            F.count(F.lit(1)).alias("pfxoverlap"),
+        )
+    )
+
+
+def _verify(
+    cand: DataFrame,
+    R: _Side,
+    S: _Side,
+    t: float,
+    *,
+    n_words: int,
+    array_ok: bool,
+    bound: int,
+) -> DataFrame:
+    """Suffix verification (jaccard_join.py:169-188, 386-405): count
+    token matches with ``pos >= maxPos`` on BOTH sides (>=, not >, to
+    catch pairs whose prefixes match entirely but suffixes share
+    nothing), then accept iff ``sfx + pfxOverlap - 1 >= bound``. A pair
+    with zero suffix matches is dropped (inner-join semantics) — exactly
+    as the reference's three-way join behaves. Returns the accepted
+    ``(lid, rid, llen, rlen, pfxoverlap, sfx)`` rows. No
+    remaining-suffix pre-filter anywhere: it is provably vacuous
+    (_positional_cond).
+
+    Three strategies, one per data shape:
+    - bitsets (``n_words``): ``pos >= maxPos`` on both sides ==
+      ``tid >= max(ltid, rtid)``, a masked AND + popcount per pair;
+    - ``array_ok`` (the tokenizer PROMISES distinct ``(id, token)``
+      rows, or the gate MEASURED none — see _RUNTIME_DISTINCT_ARRAY):
+      compiled slice + array_intersect against pos-ordered per-doc
+      arrays, no pairs×tokens intermediate;
+    - otherwise (duplicate rows, measured or unmeasured) the
+      reference's pairs×tokens three-way join.
+    The per-doc attach tables broadcast when the gate clears
+    (_verify_attach): doc-level tables on doc counts with the side's
+    token rows as the ratio denominator, token-level on token rows."""
+
+    def attach(per_doc: DataFrame, side: _Side, p: str, cap=None):
+        return _verify_attach(
+            per_doc.select(*[F.col(c).alias(p + c) for c in per_doc.columns]),
+            side.docs, cap, bound=bound, decide_rows=side.toks,
+        )
+
+    if n_words:
+        cap = _bitset_verify_cap(n_words)
+        out = (
+            cand.join(attach(_doc_bitsets(R.tkdf, n_words), R, "l", cap), "lid")
+            .join(attach(_doc_bitsets(S.tkdf, n_words), S, "r", cap), "rid")
+            .withColumn("tidstart", F.greatest("lmax", "rmax"))
+            .withColumn("sfx", _bitset_suffix_overlap(n_words))
+        )
+    elif array_ok:
+        out = (
+            cand.join(attach(_pos_token_arrays(R.tkdf), R, "l"), "lid")
+            .join(attach(_pos_token_arrays(S.tkdf), S, "r"), "rid")
+            .withColumn(
+                "sfx",
+                _suffix_overlap(
+                    F.col("larr"), F.col("llen"), F.col("lmax"),
+                    F.col("rarr"), F.col("rlen"), F.col("rmax"),
+                ),
+            )
+        )
+    else:
+        VL = _verify_attach(
+            R.tkdf.alias("VL"), R.toks, token_level=True, bound=bound
+        )
+        VR = _verify_attach(
+            S.tkdf.alias("VR"), S.toks, token_level=True, bound=bound
+        )
+        out = (
+            cand.join(VL, F.col("lid") == F.col("VL.id"))
+            .join(
+                VR,
+                (F.col("rid") == F.col("VR.id"))
+                & (F.col("VL.token") == F.col("VR.token"))
+                & (F.col("VL.pos") >= F.col("lmax"))
+                & (F.col("VR.pos") >= F.col("rmax")),
+            )
+            .groupBy(
+                "lid", "rid", F.col("VL.len").alias("llen"),
+                F.col("VR.len").alias("rlen"), "pfxoverlap",
+            )
+            .agg(F.count(F.lit(1)).alias("sfx"))
+        )
+    return out.filter(
+        (F.col("sfx") >= 1)
+        & _overlap_cond(
+            F.col("sfx") + F.col("pfxoverlap") - 1,
+            F.col("llen"), F.col("rlen"), t,
+        )
+    )
+
+
+def _prefix_filter_join(
+    R: _Side,
+    S: _Side,
+    pair_cond: Column,
+    out_cols: tuple[str, str],
+    t: float,
+    *,
+    n_words: int,
+    rows_distinct: bool,
+    dup_rows: int,
+    bound: int,
+    with_score: bool,
+) -> DataFrame:
+    """Candidates → verification → the output pair table: indexing
+    side R, probing side S, ``pair_cond`` the join-specific candidate
+    predicate over the aliases ``R``/``S``. ``out_cols`` names the R and
+    S id columns; ``with_score`` appends ``jaccard`` (_jaccard_score)."""
+    cand = _candidates(
+        R.tkdf, S.tkdf, pair_cond, t, "tid" if n_words else "pos"
+    )
+    array_ok = rows_distinct or (_RUNTIME_DISTINCT_ARRAY and dup_rows == 0)
+    return _verify(
+        cand, R, S, t, n_words=n_words, array_ok=array_ok, bound=bound
+    ).select(
+        F.col("lid").alias(out_cols[0]),
+        F.col("rid").alias(out_cols[1]),
+        *_score_cols(with_score),
+    )
+
+
+# --------------------------------------------------------------------------
 # self join (reference _JaccardSelfJoin, jaccard_join.py:111-232)
 # --------------------------------------------------------------------------
 
@@ -792,7 +1071,6 @@ def jaccard_self_join(
     threshold: float,
     l_out_prefix: str = "l_",
     r_out_prefix: str = "r_",
-    persist: bool = True,
     with_score: bool = False,
     hot_df_threshold: int | str | None = "auto",
 ) -> DataFrame:
@@ -806,7 +1084,10 @@ def jaccard_self_join(
     the hot-token straggler on every join, so the mitigation must not
     hide behind a kwarg); an int overrides the threshold, ``None``
     disables. It affects only the tkdf build plan, never the
-    result."""
+    result.
+
+    One token table, indexed and probed: plain doc frequency, and the
+    pair key ``l_id`` ordering each unordered pair once."""
     if with_score and not tokenizer.return_set:
         raise ValueError(
             "with_score requires set semantics (return_set=True): the "
@@ -815,322 +1096,65 @@ def jaccard_self_join(
         )
     _validate_hot_threshold(hot_df_threshold)
     t = float(threshold)
-    tokens = tokenizer.tokenize(df, key_attr, join_attr)
-    if persist:
-        # tokens feed both the doc-frequency aggregation and the tkdf
-        # join — uncached, the tokenize chain executes twice.
-        tokens = tokens.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # Verification strategy: when the vocabulary is small enough that a
-    # document's token set fits in a few 64-bit words, suffix overlap
-    # is a masked AND + popcount (pure codegen) — measured ~8x faster
-    # than per-pair array_intersect on the dense q-gram corpus.
-    n_words = 0
-    dfreq = None
-    dfreq_stats: dict = {}
-    if persist:
-        # ONE eager aggregate over the persisted doc-frequency table
-        # drives EVERY plan decision (round 10 — previously three
-        # separate probe jobs): vocabulary size (bitset gate),
-        # hot-split engagement (N, max df), and the sparse
-        # fast-decline (sum df²). dfreq is the algorithm's own
-        # required shuffle — persisting it means the tkdf build
-        # reuses it instead of recomputing, so the only added cost is
-        # reading back the vocab-sized table once.
-        dfreq = tokens.groupBy("token").agg(
-            F.count(F.lit(1)).alias("df")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        row = dfreq.agg(
-            F.count(F.lit(1)).alias("v"),
-            F.sum("df").alias("n"),
-            F.max("df").alias("m"),
-            F.sum((F.col("df") * F.col("df")).cast("double")).alias("sq"),
-        ).first()
-        vocab_n = int(row["v"] or 0)
-        dfreq_stats = {
-            "n_tok": int(row["n"] or 0),
-            "max_df": int(row["m"] or 0),
-            "sumsq": float(row["sq"] or 0.0),
-        }
-        if tokenizer.rows_distinct and 0 < vocab_n <= _MAX_BITSET_VOCAB:
-            n_words = (vocab_n + 63) // 64
-        if hot_df_threshold == "auto":
-            hot_df_threshold = _auto_hot_threshold(
-                dfreq_stats["n_tok"],
-                dfreq_stats["max_df"],
-                _shuffle_partitions(tokens),
-            )
-    else:
-        if hot_df_threshold == "auto":
-            # the auto stats job would re-run the tokenize chain
-            hot_df_threshold = None
-        if tokenizer.rows_distinct:
-            # Unpersisted input: bounded two-phase vocab gate. Probe:
-            # distinct tokens within a BOUNDED row sample (one narrow
-            # limit + a 50K-row shuffle) — if the sample alone exceeds
-            # the cap, the global vocabulary certainly does, and the
-            # global distinct (a full shuffle of every token on a
-            # 100 TB corpus just to learn "too big") is skipped
-            # entirely. Only sample-small vocabularies pay the exact
-            # count: limit(MAX+1).count() == min(actual, MAX+1), exact
-            # whenever the gate passes (bitset width must cover every
-            # tid), with the reduce side stopping after MAX+1 distinct
-            # tokens.
-            vocab_n = (
-                tokens.select("token").limit(_VOCAB_PROBE_ROWS)
-                .distinct().count()
-            )
-            if vocab_n <= _MAX_BITSET_VOCAB:
-                vocab_n = (
-                    tokens.select("token").distinct()
-                    .limit(_MAX_BITSET_VOCAB + 1).count()
-                )
-            if 0 < vocab_n <= _MAX_BITSET_VOCAB:
-                n_words = (vocab_n + 63) // 64
-
-    if n_words:
-        # bitset path: the token dim is broadcast wholesale for the
-        # tid ranking — the build join is already map-side, skew-free
-        tkdf = _tokens_with_tid(tokens, dfreq=dfreq)
-    else:
-        tkdf = tokens_with_doc_freq(
-            tokens,
-            with_pair_key=True,
-            hot_df_threshold=hot_df_threshold,
-            dfreq=dfreq,
-        )
-    if persist:
-        tkdf = tkdf.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # Candidate generation (jaccard_join.py:148-166). Single-side
-    # prefix conditions are applied pre-join: L carries the indexing
-    # prefix, R the probing prefix — identical predicate set to the
-    # reference's fused WHERE, but explicit so the shuffle inputs
-    # shrink before the token equi-join.
-    Lp = tkdf.filter(
-        _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
-    ).alias("L")
-    Rp = tkdf.filter(
-        _probing_prefix_cond(F.col("len"), F.col("pos"), t)
-    ).alias("R")
-    cond = (
-        (F.col("L.token") == F.col("R.token"))
-        & (F.col("L.l_id") < F.col("R.l_id"))  # each unordered pair once
-        & _length_cond(F.col("L.len"), F.col("R.len"), t)  # length filter
-        & _positional_cond(
-            F.col("L.len"), F.col("L.pos"), F.col("R.len"), F.col("R.pos"), t
-        )
+    # tokens feed both the doc-frequency aggregation and the tkdf
+    # join — uncached, the tokenize chain executes twice.
+    tokens = tokenizer.tokenize(df, key_attr, join_attr).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    out_cols = (
-        f"{l_out_prefix}{key_attr}",
-        f"{r_out_prefix}{key_attr}",
+    dfreq = tokens.groupBy("token").agg(
+        F.count(F.lit(1)).alias("df")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    stats, n_words, hot_thr = _plan_from_dfreq(
+        dfreq, ("df",), tokenizer.rows_distinct, hot_df_threshold,
+        _shuffle_partitions(tokens),
     )
-    # Broadcast-gate scalars: a bounded probe first — corpus-scale
-    # inputs stop scanning at cap+1 rows (their attach tables cannot
-    # broadcast anyway) — then ONE fused aggregate on the persisted
-    # tkdf for (n_docs, n_tok, candidate bound); the bound-ratio gate
-    # in _verify_attach decides from there (no doc-count floor — see
-    # the round-10 note above _BROADCAST_VERIFY_MIN_RATIO's companion
-    # comment: density, not document count, is what the gate must
-    # test, and the bound IS the density measurement). An unpersisted
-    # tkdf would recompute the tokenize chain per scalar, so the gate
-    # is skipped (shuffle joins kept, correct at every scale) when
-    # persist=False.
-    n_docs = n_tok = bound = 0
-    dup_rows = -1  # unknown until the gate-stats job measures it
-    # Sparse-corpus fast decline (round 10): the auto-split aggregate
-    # already computed sum(df²), a sound upper bound on the candidate
-    # bound — when even IT cannot clear the ratio for the token-row
-    # denominator every attach decides against, no broadcast can pay
-    # and the exact gate-stats job (a full tkdf materialization
-    # barrier) is skipped outright. Dense corpora (the broadcast
-    # winners) blow past this test and pay the exact job as before.
-    cheap_decline = (
-        "sumsq" in dfreq_stats
-        and dfreq_stats["sumsq"]
-        < _BROADCAST_VERIFY_MIN_RATIO * max(dfreq_stats["n_tok"], 1)
+    tkdf = _token_table(
+        tokens, dfreq, n_words=n_words, hot_thr=hot_thr, pair_key=True
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+
+    # Broadcast-gate scalars. Sparse-corpus fast decline (round 10):
+    # sum(df²) bounds the candidate bound from above — when even IT
+    # cannot clear the ratio for the token-row denominator every
+    # attach decides against, no broadcast can pay and the exact
+    # gate-stats job (a full tkdf materialization barrier) is skipped.
+    # Dense corpora (the broadcast winners) blow past this test. Then
+    # a bounded probe: corpus-scale inputs stop scanning at cap+1 rows
+    # (their attach tables cannot broadcast anyway). On both skips the
+    # counts stay unknown: every attach declines, and the duplicate-row
+    # count too, so undeclared-distinct rows keep the three-way verify.
+    side, bound, dup_rows = _Side(tkdf, 0, 0), 0, -1
+    cheap_decline = stats["sumsq"] < _BROADCAST_VERIFY_MIN_RATIO * max(
+        stats["n_tok"], 1
     )
     if (
-        persist
-        and not cheap_decline
+        not cheap_decline
         and _doc_count_probe(df) <= _MAX_BROADCAST_VERIFY_DOCS
     ):
-        n_docs, n_tok, bound, dup_rows = _self_gate_stats(
-            tkdf, t, skip_dup=tokenizer.rows_distinct
-        )
+        g = _gate_stats([tkdf], t, skip_dup=tokenizer.rows_distinct)
+        side = _Side(tkdf, g.docs[0], g.toks[0])
+        bound, dup_rows = g.bound[0][0], g.dup_rows
         # The gate-stats aggregate materialized tkdf into its cache,
         # so the vocab-sized dfreq cache entry is now dead weight —
         # free it (ADVICE r10: repeated join calls in one session
         # accumulated one vocab-sized entry each). On the skip paths
-        # (cheap_decline / corpus over the doc cap) tkdf is still
-        # lazy — unpersisting there would force one extra dfreq
-        # shuffle when tkdf first materializes, so those keep the
-        # cache entry until session clearCache.
-        if dfreq is not None:
-            dfreq.unpersist()
+        # tkdf is still lazy — unpersisting there would force one
+        # extra dfreq shuffle when tkdf first materializes, so those
+        # keep the cache entry until session clearCache.
+        dfreq.unpersist()
 
-    if n_words:
-        # Bitset verification: within a doc pos is increasing in tid,
-        # so max(pos of matched prefix tokens) corresponds to max(tid)
-        # and ``pos >= maxPos (both sides)`` == ``tid >= max(ltid, rtid)``.
-        cand = (
-            Lp.join(Rp, cond)
-            .groupBy(
-                F.col("L.id").alias("lid"),
-                F.col("R.id").alias("rid"),
-            )
-            .agg(
-                F.max("L.tid").alias("ltid"),
-                F.max("R.tid").alias("rtid"),
-                F.count(F.lit(1)).alias("pfxoverlap"),
-            )
-        )
-        docbits = _doc_bitsets(tkdf, n_words)
-        bit_cap = _bitset_verify_cap(n_words)
-        return (
-            cand.join(
-                _verify_attach(docbits.select(
-                    F.col("id").alias("lid"),
-                    F.col("len").alias("llen"),
-                    *[F.col(f"b{i}").alias(f"lb{i}") for i in range(n_words)],
-                ), n_docs, bit_cap, bound=bound, decide_rows=n_tok),
-                "lid",
-            )
-            .join(
-                _verify_attach(docbits.select(
-                    F.col("id").alias("rid"),
-                    F.col("len").alias("rlen"),
-                    *[F.col(f"b{i}").alias(f"rb{i}") for i in range(n_words)],
-                ), n_docs, bit_cap, bound=bound, decide_rows=n_tok),
-                "rid",
-            )
-            .withColumn("tidstart", F.greatest("ltid", "rtid"))
-            .withColumn("sfx", _bitset_suffix_overlap(n_words))
-            .filter(
-                (F.col("sfx") >= 1)
-                & _overlap_cond(
-                    F.col("sfx") + F.col("pfxoverlap") - 1,
-                    F.col("llen"), F.col("rlen"), t,
-                )
-            )
-            .select(
-                F.col("lid").alias(out_cols[0]),
-                F.col("rid").alias(out_cols[1]),
-                *_score_cols(with_score),
-            )
-        )
-
-    cand = (
-        Lp.join(Rp, cond)
-        .groupBy(
-            F.col("L.id").alias("lid"),
-            F.col("R.id").alias("rid"),
-        )
-        .agg(
-            F.max("L.pos").alias("lmaxpos"),
-            F.max("R.pos").alias("rmaxpos"),
-            F.count(F.lit(1)).alias("pfxoverlap"),
-        )
+    return _prefix_filter_join(
+        side,
+        side,
+        (F.col("R.l_id") < F.col("S.l_id"))  # each unordered pair once
+        & _length_cond(F.col("R.len"), F.col("S.len"), t),
+        (f"{l_out_prefix}{key_attr}", f"{r_out_prefix}{key_attr}"),
+        t,
+        n_words=n_words,
+        rows_distinct=tokenizer.rows_distinct,
+        dup_rows=dup_rows,
+        bound=bound,
+        with_score=with_score,
     )
-
-    # Verification (jaccard_join.py:169-188): count token matches
-    # with pos >= maxPos on BOTH sides (>=, not >, to catch pairs
-    # whose prefixes match entirely but suffixes share nothing), then
-    # accept iff ``sfx + pfxOverlap - 1 >= bound``. A pair with zero
-    # suffix matches is dropped (inner-join semantics) — exactly as
-    # the reference's three-way join behaves.
-    if tokenizer.rows_distinct or (_RUNTIME_DISTINCT_ARRAY and dup_rows == 0):
-        # Fast path: compiled slice + array_intersect against
-        # pos-ordered per-doc arrays — no pairs×tokens intermediate.
-        # Taken when the tokenizer PROMISES distinct (id, token) rows,
-        # or when the gate-stats job MEASURED zero duplicate rows in
-        # this corpus (exact — the suffix row-pair count then equals
-        # the set overlap; see _RUNTIME_DISTINCT_ARRAY). When
-        # duplicates exist, or the stats were skipped (unpersisted
-        # input, sparse fast-decline, corpus over the doc probe cap),
-        # the shuffle three-way join below remains the plan. (No
-        # remaining-suffix pre-filter here: it is provably vacuous —
-        # _positional_cond.)
-        arrs = _pos_token_arrays(tkdf)
-        return (
-            cand.join(
-                _verify_attach(arrs.select(
-                    F.col("id").alias("lid"),
-                    F.col("len").alias("llen"),
-                    F.col("arr").alias("la"),
-                ), n_docs, bound=bound, decide_rows=n_tok),
-                "lid",
-            )
-            .join(
-                _verify_attach(arrs.select(
-                    F.col("id").alias("rid"),
-                    F.col("len").alias("rlen"),
-                    F.col("arr").alias("ra"),
-                ), n_docs, bound=bound, decide_rows=n_tok),
-                "rid",
-            )
-            .withColumn(
-                "sfx",
-                _suffix_overlap(
-                    F.col("la"), F.col("llen"), F.col("lmaxpos"),
-                    F.col("ra"), F.col("rlen"), F.col("rmaxpos"),
-                ),
-            )
-            .filter(
-                (F.col("sfx") >= 1)
-                & _overlap_cond(
-                    F.col("sfx") + F.col("pfxoverlap") - 1,
-                    F.col("llen"), F.col("rlen"), t,
-                )
-            )
-            .select(
-                F.col("lid").alias(out_cols[0]),
-                F.col("rid").alias(out_cols[1]),
-                *_score_cols(with_score),
-            )
-        )
-
-    # Generic path (duplicate-carrying token rows, measured or
-    # unmeasured): the reference's pairs×tokens three-way join.
-    # Through round 10 this path first
-    # attached per-side doc lengths (two extra joins over a distinct
-    # lens dim) to evaluate a remaining-suffix pre-filter; the filter
-    # is provably vacuous (see _positional_cond), so the joins were
-    # pure plan overhead and are gone.
-    # token-level attach gate: n_tok came out of the same fused
-    # scalar job as n_docs/bound (zero when not persisted — declines)
-    Lv = tkdf.alias("VL")
-    Rv = tkdf.alias("VR")
-    matches = (
-        cand.join(
-            _verify_attach(Lv, n_tok, token_level=True, bound=bound),
-            F.col("lid") == F.col("VL.id"),
-        )
-        .join(
-            _verify_attach(Rv, n_tok, token_level=True, bound=bound),
-            (F.col("rid") == F.col("VR.id"))
-            & (F.col("VL.token") == F.col("VR.token"))
-            & (F.col("VL.pos") >= F.col("lmaxpos"))
-            & (F.col("VR.pos") >= F.col("rmaxpos")),
-        )
-        .groupBy(
-            "lid", "rid", F.col("VL.len").alias("llen"),
-            F.col("VR.len").alias("rlen"), "pfxoverlap",
-        )
-        .agg(F.count(F.lit(1)).alias("sfx"))
-        .filter(
-            _overlap_cond(
-                F.col("sfx") + F.col("pfxoverlap") - 1,
-                F.col("llen"), F.col("rlen"), t,
-            )
-        )
-        .select(
-            F.col("lid").alias(out_cols[0]),
-            F.col("rid").alias(out_cols[1]),
-            *_score_cols(with_score),
-        )
-    )
-    return matches
 
 
 def jaccard_self_join_brute_force(
@@ -1206,7 +1230,6 @@ def jaccard_inner_join(
     threshold: float,
     l_out_prefix: str = "l_",
     r_out_prefix: str = "r_",
-    persist: bool = True,
     with_score: bool = False,
     hot_df_threshold: int | str | None = "auto",
 ) -> DataFrame:
@@ -1222,16 +1245,15 @@ def jaccard_inner_join(
     the persisted dfreq; an int overrides; ``None`` disables. Build
     plan only — output rows are identical either way.
 
-    Driver-side actions: one fused aggregate per side carrying the
-    widow count that mirrors the reference's ``fetchall()[0][0]``
-    side-swap decision — the side with more indexing-prefix widows
-    becomes the indexing side R (ties go to (r, l):
-    jaccard_join.py:353, SURVEY.md §4.3.4) — plus the broadcast-gate
-    doc/token counts in the same job, and one small candidate-bound
-    join when an attach table could actually broadcast (see
-    _BROADCAST_VERIFY_MIN_RATIO). The reference's two additional
-    full-table counts (widow placeholder) are replaced by an
-    order-equivalent constant — see below.
+    Driver-side actions: the dfreq aggregate, then ONE side-tagged
+    gate-stats job over both token tables carrying the widow counts
+    that mirror the reference's ``fetchall()[0][0]`` side-swap decision
+    — the side with more indexing-prefix widows becomes the indexing
+    side R (ties go to (r, l): jaccard_join.py:353, SURVEY.md §4.3.4) —
+    plus the broadcast-gate counts and candidate bounds for both
+    orientations. The reference's two additional full-table counts
+    (widow placeholder) are replaced by an order-equivalent constant —
+    see below.
     """
     if with_score and not tokenizer.return_set:
         raise ValueError(
@@ -1241,11 +1263,12 @@ def jaccard_inner_join(
         )
     _validate_hot_threshold(hot_df_threshold)
     t = float(threshold)
-    l_tokens = tokenizer.tokenize(l_df, l_key_attr, l_join_attr)
-    r_tokens = tokenizer.tokenize(r_df, r_key_attr, r_join_attr)
-    if persist:
-        l_tokens = l_tokens.persist(StorageLevel.MEMORY_AND_DISK)
-        r_tokens = r_tokens.persist(StorageLevel.MEMORY_AND_DISK)
+    l_tokens = tokenizer.tokenize(l_df, l_key_attr, l_join_attr).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    r_tokens = tokenizer.tokenize(r_df, r_key_attr, r_join_attr).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
     # Widow placeholder (jaccard_join.py:266-268). The reference uses
     # count(l)*count(r)+1 — two full-table scans whose only role is a
@@ -1255,19 +1278,19 @@ def jaccard_inner_join(
     # either way and fall to the token tiebreak; real products are
     # <= count(l)*count(r) < 2^63-1 anywhere long arithmetic holds),
     # so the two driver-side count jobs are dropped from the critical
-    # path. The remaining two scalar counts (widow counts for the
-    # side swap) are decision-bearing and stay.
+    # path.
     widow_placeholder = (1 << 63) - 1
 
     # Cross-table document frequency: full outer join of per-side
     # dfs; df = l_df * r_df, widows get the placeholder
-    # (jaccard_join.py:270-295).
+    # (jaccard_join.py:270-295). The per-side counts stay for the
+    # heavy-hitter split (hotness is a per-side property) and the
+    # dfreq stats; both sides rank tokens by the SAME combined
+    # (df, token) order, so one tid ranking preserves pos<->tid
+    # monotonicity on each side.
     l_dfreq = l_tokens.groupBy("token").agg(F.count(F.lit(1)).alias("l_df"))
     r_dfreq = r_tokens.groupBy("token").agg(F.count(F.lit(1)).alias("r_df"))
-    # dfreq_raw keeps the per-side counts alive for the heavy-hitter
-    # split (hotness is a per-side property); dfreq is the combined
-    # view every downstream stage reads.
-    dfreq_raw = (
+    dfreq = (
         l_dfreq.join(r_dfreq, "token", "full_outer")
         .select(
             "token",
@@ -1277,382 +1300,45 @@ def jaccard_inner_join(
                 F.col("l_df") * F.col("r_df"), F.lit(widow_placeholder)
             ).alias("df"),
         )
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    dfreq = dfreq_raw.select("token", "df")
-
-    # Bitset verification gate (see self join): both sides rank tokens
-    # by the SAME combined (df, token) order, so one tid ranking over
-    # the shared dfreq preserves pos<->tid monotonicity on each side.
-    # ONE eager aggregate over the persisted cross-table dfreq drives
-    # every plan decision (round 10, mirroring the self join):
-    # vocabulary size (bitset gate — previously its own limit-count
-    # job), hot-split engagement (N, max per-side df), and the sparse
-    # fast-decline (sum l_df × r_df, a sound upper bound on the
-    # cross-side candidate bound: per token, indexing-prefix(R) ×
-    # probing-prefix(S) <= l_df × r_df). dfreq_raw is the algorithm's
-    # own required full-outer join — persisting it means both tkdf
-    # builds reuse it. Unpersisted inputs keep the bounded
-    # early-stopping vocab count and skip the rest (the aggregate
-    # would re-run both tokenize chains).
-    n_words = 0
-    hot_thr: int | None = None
-    cross_sumsq: float | None = None
-    vocab_n = 0
-    if persist:
-        dfreq_raw = dfreq_raw.persist(StorageLevel.MEMORY_AND_DISK)
-        row = dfreq_raw.agg(
-            F.count(F.lit(1)).alias("v"),
-            F.sum(
-                F.coalesce("l_df", F.lit(0))
-                + F.coalesce("r_df", F.lit(0))
-            ).alias("n"),
-            F.max(
-                F.greatest(
-                    F.coalesce("l_df", F.lit(0)),
-                    F.coalesce("r_df", F.lit(0)),
-                )
-            ).alias("m"),
-            F.sum(
-                F.coalesce(
-                    (F.col("l_df") * F.col("r_df")).cast("double"),
-                    F.lit(0.0),
-                )
-            ).alias("sq"),
-        ).first()
-        vocab_n = int(row["v"] or 0)
-        cross_sumsq = float(row["sq"] or 0.0)
-        if hot_df_threshold == "auto":
-            hot_df_threshold = _auto_hot_threshold(
-                int(row["n"] or 0),
-                int(row["m"] or 0),
-                _shuffle_partitions(l_tokens),
-            )
-    else:
-        if hot_df_threshold == "auto":
-            hot_df_threshold = None
-        if tokenizer.rows_distinct:
-            # Early-stopping gate count: exact iff it passes, capped
-            # at MAX+1 otherwise.
-            vocab_n = dfreq.limit(_MAX_BITSET_VOCAB + 1).count()
-    if tokenizer.rows_distinct and 0 < vocab_n <= _MAX_BITSET_VOCAB:
-        n_words = (vocab_n + 63) // 64
-        dfreq = dfreq.withColumn(
-            "tid", F.row_number().over(Window.orderBy("df", "token"))
-        )
-        dfreq = F.broadcast(dfreq)
-    if n_words:
-        # bitset path: dfreq (with tid) broadcasts wholesale — the
-        # build join is already map-side, skew-free; the heavy-hitter
-        # split is meaningless there and is ignored
-        hot_df_threshold = None
-    if hot_df_threshold and hot_df_threshold != "auto":
-        hot_thr = int(hot_df_threshold)
-
-    def _tkdf(tokens: DataFrame, side_df: str) -> DataFrame:
-        w = Window.partitionBy("id").orderBy("df", "token")
-        cols = ["id", "len", "token", "df"] + (["tid"] if n_words else [])
-        if hot_thr:
-            # per-side split: this side's own df is what decides how
-            # many of ITS rows pile into one partition of this join
-            side_hot = F.coalesce(F.col(side_df), F.lit(0)) >= F.lit(hot_thr)
-            hot = dfreq_raw.filter(side_hot).select("token", "df")
-            cold = dfreq_raw.filter(~side_hot).select("token", "df")
-            joined = (
-                tokens.join(
-                    F.broadcast(hot.select("token")), "token", "left_anti"
-                )
-                .join(cold, "token")
-                .unionByName(tokens.join(F.broadcast(hot), "token"))
-            )
-        else:
-            joined = tokens.join(dfreq, "token")
-        return joined.select(
-            *cols,
-            F.row_number().over(w).alias("pos"),
-        )
-
-    l_tkdf = _tkdf(l_tokens, "l_df")
-    r_tkdf = _tkdf(r_tokens, "r_df")
-    if persist:
-        l_tkdf = l_tkdf.persist(StorageLevel.MEMORY_AND_DISK)
-        r_tkdf = r_tkdf.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # Indexing prefixes per side + widow counts (jaccard_join.py:324-351).
-    def _indexing_prefix(tkdf: DataFrame) -> DataFrame:
-        return tkdf.filter(
-            _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
-        )
-
-    l_pfx = _indexing_prefix(l_tkdf)
-    r_pfx = _indexing_prefix(r_tkdf)
-
-    # Fused per-side scalars (round 9): the decision-bearing widow
-    # count (reference fetchall side swap), the doc count, and the
-    # token count come out of ONE side-tagged aggregate over BOTH
-    # sides — round 8 paid six scalar jobs here (2 widow counts + 2
-    # full doc counts + 2 token counts); this pays one, plus one
-    # small candidate-bound join below only when something could
-    # actually broadcast. The union reads both (persisted) token
-    # frames in a single job, saving a driver scheduling round-trip
-    # per call — the fixed floor that dominates small inner joins.
-    idx_cond = _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
-
-    def _tagged(tkdf: DataFrame, side: int) -> DataFrame:
-        return tkdf.select(
-            F.lit(side).alias("side"), "id", "token", "len", "pos", "df"
-        )
-
-    side_rows = {
-        row["side"]: row
-        for row in _tagged(l_tkdf, 0)
-        .unionByName(_tagged(r_tkdf, 1))
-        .groupBy("side")
-        .agg(
-            F.sum(
-                (idx_cond & (F.col("df") == widow_placeholder)).cast("long")
-            ).alias("w"),
-            F.sum((F.col("pos") == 1).cast("long")).alias("d"),
-            F.count(F.lit(1)).alias("c"),
-            # exact duplicate (id, token) row count per side, gating
-            # the runtime-distinct array verification (see
-            # _RUNTIME_DISTINCT_ARRAY). A rows_distinct tokenizer
-            # takes the array verification unconditionally, so its
-            # callers skip the count_distinct — the only hash-set
-            # aggregate in the job (round 12).
-            *(
-                []
-                if tokenizer.rows_distinct
-                else [
-                    (
-                        F.count(F.lit(1))
-                        - F.count_distinct("id", "token")
-                    ).alias("dup")
-                ]
-            ),
-        )
-        .collect()
-    }
+    _, n_words, hot_thr = _plan_from_dfreq(
+        dfreq, ("l_df", "r_df"), tokenizer.rows_distinct, hot_df_threshold,
+        _shuffle_partitions(l_tokens),
+    )
+    tkdfs = [
+        _token_table(
+            tokens, dfreq, n_words=n_words, hot_thr=hot_thr, hot_col=side_df
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        for tokens, side_df in ((l_tokens, "l_df"), (r_tokens, "r_df"))
+    ]
+    g = _gate_stats(
+        tkdfs, t, skip_dup=tokenizer.rows_distinct, widow_df=widow_placeholder
+    )
     # That aggregate materialized both persisted tkdfs, so the
     # cross-table dfreq cache is now dead weight — free it (ADVICE
-    # r10; mirrors the self-join's post-gate-stats unpersist).
-    if persist:
-        dfreq_raw.unpersist()
-
-    def _side_stats(side: int) -> tuple[int, int, int, int]:
-        row = side_rows.get(side)
-        if row is None:  # empty side: no tokens at all
-            return 0, 0, 0, 0
-        dup = 0 if tokenizer.rows_distinct else int(row["dup"] or 0)
-        return (
-            int(row["w"] or 0), int(row["d"] or 0),
-            int(row["c"] or 0), dup,
-        )
-
-    l_widows, n_l_docs, n_l_tok, l_dup = _side_stats(0)
-    r_widows, n_r_docs, n_r_tok, r_dup = _side_stats(1)
-    dup_rows = l_dup + r_dup
+    # r10; mirrors the self join's post-gate-stats unpersist).
+    dfreq.unpersist()
 
     # Side swap: R = indexing side (keeps short 2t/(1+t) prefix),
-    # S = probing side (rebuilt with the longer t prefix).
-    if l_widows > r_widows:
-        R_tkdf, S_tkdf = l_tkdf, r_tkdf
-        R_pfx = l_pfx
-        r_prefix_out = (l_out_prefix, r_out_prefix)
-        n_R_docs, n_S_docs = n_l_docs, n_r_docs
-        n_R_tok, n_S_tok = n_l_tok, n_r_tok
-    else:
-        R_tkdf, S_tkdf = r_tkdf, l_tkdf
-        R_pfx = r_pfx
-        r_prefix_out = (r_out_prefix, l_out_prefix)
-        n_R_docs, n_S_docs = n_r_docs, n_l_docs
-        n_R_tok, n_S_tok = n_r_tok, n_l_tok
-    S_pfx = S_tkdf.filter(_probing_prefix_cond(F.col("len"), F.col("pos"), t))
-
-    # Cross-side candidate bound (see _BROADCAST_VERIFY_MIN_RATIO):
-    # sum over tokens of indexing-prefix df(R) × probing-prefix df(S)
-    # bounds the candidate equi-join output. One small job on the
-    # persisted token frames — skipped when no attach table could
-    # clear its size cap anyway (corpus scale) or when the frames are
-    # not persisted (the scalar would recompute the tokenize chain).
-    bound = 0
-    # Sparse-corpus fast decline (round 10, see the self join): when
-    # even the sum(l_df × r_df) upper bound cannot clear the ratio at
-    # the SMALLER side's token-row denominator, every attach's
-    # decision is already decline and the exact bound join is skipped.
-    cheap_decline = (
-        cross_sumsq is not None
-        and cross_sumsq
-        < _BROADCAST_VERIFY_MIN_RATIO * max(min(n_R_tok, n_S_tok), 1)
-    )
-    if persist and not cheap_decline and (
-        min(n_R_docs, n_S_docs) <= _MAX_BROADCAST_VERIFY_DOCS
-        or min(n_R_tok, n_S_tok) <= _MAX_BROADCAST_VERIFY_TOKENS
-    ):
-        ra = R_pfx.groupBy("token").agg(F.count(F.lit(1)).alias("a"))
-        sb = S_pfx.groupBy("token").agg(F.count(F.lit(1)).alias("b"))
-        bound = int(
-            ra.join(sb, "token")
-            .agg(F.sum(F.col("a") * F.col("b")).alias("s"))
-            .first()["s"]
-            or 0
-        )
-    if not persist:
-        n_R_docs = n_S_docs = n_R_tok = n_S_tok = 0
-
-    # Candidates (jaccard_join.py:364-384): two-sided length filter +
-    # positional filter on the prefix-token equi-join.
-    Rp = R_pfx.alias("R")
-    Sp = S_pfx.alias("S")
-    cond = (
-        (F.col("R.token") == F.col("S.token"))
-        & _length_cond(F.col("R.len"), F.col("S.len"), t)
-        & _length_cond(F.col("S.len"), F.col("R.len"), t)
-        & _positional_cond(
-            F.col("R.len"), F.col("R.pos"), F.col("S.len"), F.col("S.pos"), t
-        )
-    )
-    # Verification (jaccard_join.py:386-405). Output column names
+    # S = probing side (the longer t prefix). Output column names
     # reproduce the reference quirk: R's out_prefix pairs with the
     # *left* key attr name and S's with the right, regardless of swap.
-    out_r = f"{r_prefix_out[0]}{l_key_attr}"
-    out_s = f"{r_prefix_out[1]}{r_key_attr}"
-
-    if n_words:
-        cand = (
-            Rp.join(Sp, cond)
-            .groupBy(F.col("R.id").alias("rid"), F.col("S.id").alias("sid"))
-            .agg(
-                F.max("R.tid").alias("ltid"),
-                F.max("S.tid").alias("rtid"),
-                F.count(F.lit(1)).alias("pfxoverlap"),
-            )
-        )
-        r_bits = _doc_bitsets(R_tkdf, n_words)
-        s_bits = _doc_bitsets(S_tkdf, n_words)
-        bit_cap = _bitset_verify_cap(n_words)
-        return (
-            cand.join(
-                _verify_attach(r_bits.select(
-                    F.col("id").alias("rid"),
-                    F.col("len").alias("llen"),
-                    *[F.col(f"b{i}").alias(f"lb{i}") for i in range(n_words)],
-                ), n_R_docs, bit_cap, bound=bound, decide_rows=n_R_tok),
-                "rid",
-            )
-            .join(
-                _verify_attach(s_bits.select(
-                    F.col("id").alias("sid"),
-                    F.col("len").alias("rlen"),
-                    *[F.col(f"b{i}").alias(f"rb{i}") for i in range(n_words)],
-                ), n_S_docs, bit_cap, bound=bound, decide_rows=n_S_tok),
-                "sid",
-            )
-            .withColumn("tidstart", F.greatest("ltid", "rtid"))
-            .withColumn("sfx", _bitset_suffix_overlap(n_words))
-            .filter(
-                (F.col("sfx") >= 1)
-                & _overlap_cond(
-                    F.col("sfx") + F.col("pfxoverlap") - 1,
-                    F.col("llen"), F.col("rlen"), t,
-                )
-            )
-            .select(
-                F.col("rid").alias(out_r),
-                F.col("sid").alias(out_s),
-                *_score_cols(with_score),
-            )
-        )
-
-    cand = (
-        Rp.join(Sp, cond)
-        .groupBy(F.col("R.id").alias("rid"), F.col("S.id").alias("sid"))
-        .agg(
-            F.max("R.pos").alias("rmaxpos"),
-            F.max("S.pos").alias("smaxpos"),
-            F.count(F.lit(1)).alias("pfxoverlap"),
-        )
-    )
-
-    if tokenizer.rows_distinct or (_RUNTIME_DISTINCT_ARRAY and dup_rows == 0):
-        # Compiled slice+array_intersect verification (see self join):
-        # declared-distinct rows, or zero duplicate rows MEASURED
-        # across both sides by the fused per-side scalars.
-        r_arrs = _pos_token_arrays(R_tkdf)
-        s_arrs = _pos_token_arrays(S_tkdf)
-        return (
-            cand.join(
-                _verify_attach(r_arrs.select(
-                    F.col("id").alias("rid"),
-                    F.col("len").alias("rlen"),
-                    F.col("arr").alias("rarr"),
-                ), n_R_docs, bound=bound, decide_rows=n_R_tok),
-                "rid",
-            )
-            .join(
-                _verify_attach(s_arrs.select(
-                    F.col("id").alias("sid"),
-                    F.col("len").alias("slen"),
-                    F.col("arr").alias("sarr"),
-                ), n_S_docs, bound=bound, decide_rows=n_S_tok),
-                "sid",
-            )
-            .withColumn(
-                "sfx",
-                _suffix_overlap(
-                    F.col("rarr"), F.col("rlen"), F.col("rmaxpos"),
-                    F.col("sarr"), F.col("slen"), F.col("smaxpos"),
-                ),
-            )
-            .filter(
-                (F.col("sfx") >= 1)
-                & _overlap_cond(
-                    F.col("sfx") + F.col("pfxoverlap") - 1,
-                    F.col("rlen"), F.col("slen"), t,
-                )
-            )
-            .select(
-                F.col("rid").alias(out_r),
-                F.col("sid").alias(out_s),
-                *_score_cols(with_score, "rlen", "slen"),
-            )
-        )
-
-    # Generic path (duplicate rows AND long documents). The per-side
-    # doc-length attach joins that fed the remaining-suffix
-    # pre-filter are gone — the filter is provably vacuous after the
-    # positional condition (see _positional_cond).
-    # token-level attach gate: n_R_tok/n_S_tok came out of the fused
-    # per-side scalars (zero when not persisted — declines)
-    Rv = R_tkdf.alias("VR")
-    Sv = S_tkdf.alias("VS")
-    return (
-        cand.join(
-            _verify_attach(Rv, n_R_tok, token_level=True, bound=bound),
-            F.col("rid") == F.col("VR.id"),
-        )
-        .join(
-            _verify_attach(Sv, n_S_tok, token_level=True, bound=bound),
-            (F.col("sid") == F.col("VS.id"))
-            & (F.col("VR.token") == F.col("VS.token"))
-            & (F.col("VR.pos") >= F.col("rmaxpos"))
-            & (F.col("VS.pos") >= F.col("smaxpos")),
-        )
-        .groupBy(
-            "rid", "sid", F.col("VR.len").alias("rlen"),
-            F.col("VS.len").alias("slen"), "pfxoverlap",
-        )
-        .agg(F.count(F.lit(1)).alias("sfx"))
-        .filter(
-            _overlap_cond(
-                F.col("sfx") + F.col("pfxoverlap") - 1,
-                F.col("rlen"), F.col("slen"), t,
-            )
-        )
-        .select(
-            F.col("rid").alias(out_r),
-            F.col("sid").alias(out_s),
-            *_score_cols(with_score, "rlen", "slen"),
-        )
+    ri, si = (0, 1) if g.widows[0] > g.widows[1] else (1, 0)
+    prefixes = (l_out_prefix, r_out_prefix)
+    return _prefix_filter_join(
+        _Side(tkdfs[ri], g.docs[ri], g.toks[ri]),
+        _Side(tkdfs[si], g.docs[si], g.toks[si]),
+        # two-sided length filter (jaccard_join.py:364-384)
+        _length_cond(F.col("R.len"), F.col("S.len"), t)
+        & _length_cond(F.col("S.len"), F.col("R.len"), t),
+        (f"{prefixes[ri]}{l_key_attr}", f"{prefixes[si]}{r_key_attr}"),
+        t,
+        n_words=n_words,
+        rows_distinct=tokenizer.rows_distinct,
+        dup_rows=g.dup_rows,
+        bound=g.bound[ri][si],
+        with_score=with_score,
     )
 
 

@@ -28,6 +28,18 @@ _DEFAULTS = {
 }
 
 
+def _default_heap() -> str:
+    """Default ``spark.driver.memory``: half of physical memory, capped
+    at 48g. The heap is pinned with -Xms (below), so a default above
+    physical memory could not even start the JVM."""
+    cap_mb = 48 << 10
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (ValueError, OSError, AttributeError):  # no sysconf names
+        return f"{cap_mb}m"
+    return f"{min(phys // 2 // (1 << 20), cap_mb)}m"
+
+
 def get_spark(
     app_name: str = "jaccard-join-duckdb-spark",
     master: str | None = None,
@@ -51,7 +63,7 @@ def get_spark(
     # 1g default heap OOMs on the dense-corpus joins. Only applies
     # when this call actually launches the JVM (getOrCreate reuses an
     # existing session unchanged).
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap()
     # Pin the initial heap to the max (round 11). Spark passes only
     # -Xmx, so G1 starts at a tiny initial heap and repeatedly
     # commits/uncommits tens of GB as query memory ebbs — and on

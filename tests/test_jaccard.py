@@ -33,23 +33,56 @@ def test_output_column_names(purchases):
     assert out.columns == ["a_id", "b_id"]
 
 
+# One tokenizer + corpus per verification strategy of the filtered
+# joins, pinned by a plan marker: bitset popcount (q-gram sets over a
+# small vocabulary), compiled array-intersect (declared-distinct rows,
+# bitset gate closed), and the reference's three-way join (one
+# case-duplicate record makes the gate measure duplicate rows).
+_STRATEGIES = {
+    "bitset": lambda: QGramsTokzr(3),
+    "array": lambda: WhitespaceTokzr(distinct_rows=True),
+    "three_way": lambda: WhitespaceTokzr(),
+}
+
+
+def _strategy_inputs(monkeypatch, strategy):
+    """(tokenizer, rows) for ``strategy``; rows are (id, val) pairs."""
+    import jaccard_join_duckdb_spark.operators.jaccard as J
+
+    rows = list(enumerate(_lowercase_corpus()))
+    if strategy == "array":
+        monkeypatch.setattr(J, "_MAX_BITSET_VOCAB", 0)
+    if strategy == "three_way":
+        rows.append((len(rows), "Zz zz"))
+    return _STRATEGIES[strategy](), rows
+
+
+def _strategy_of(df):
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    if "bit_count" in plan:
+        return "bitset"
+    return "array" if "array_sort" in plan else "three_way"
+
+
+@pytest.mark.parametrize("strategy", sorted(_STRATEGIES))
 @pytest.mark.parametrize("t", [0.3, 0.5, 0.8])
-def test_scored_self_join(purchases, t):
+def test_scored_self_join(spark, monkeypatch, strategy, t):
     """with_score extension: the filtered path's ``sfx+pfxOverlap-1``
     overlap is EXACT (see operators.jaccard._jaccard_score), so the
     score must bit-equal brute force's ``count(*)``-derived one on
-    every common pair, and every score must sit in [t, 1]."""
-    ws = WhitespaceTokzr()
-    filt = jaccard_self_join(
-        purchases, "id", "purchases", ws, t, with_score=True
-    )
+    every common pair, and every score must sit in [t, 1] — through
+    each verification strategy."""
+    tok, rows = _strategy_inputs(monkeypatch, strategy)
+    df = spark.createDataFrame(rows, "id long, val string")
+    filt = jaccard_self_join(df, "id", "val", tok, t, with_score=True)
     assert filt.columns == ["l_id", "r_id", "jaccard"]
+    assert _strategy_of(filt) == strategy
     fs = {
         tuple(sorted((r.l_id, r.r_id), key=str)): r.jaccard
         for r in filt.collect()
     }
     brute = jaccard_self_join_brute_force(
-        purchases, "id", "purchases", ws, t, with_score=True
+        df, "id", "val", tok, t, with_score=True
     )
     bs = {
         tuple(sorted((r.l_id, r.r_id), key=str)): r.jaccard
@@ -59,22 +92,26 @@ def test_scored_self_join(purchases, t):
     assert all(t <= v <= 1.0 for v in fs.values())
 
 
-def test_scored_inner_join(purchases, interests):
-    ws = WhitespaceTokzr()
+@pytest.mark.parametrize("strategy", sorted(_STRATEGIES))
+def test_scored_inner_join(spark, monkeypatch, strategy):
+    tok, rows = _strategy_inputs(monkeypatch, strategy)
+    l_df = spark.createDataFrame(rows[:30], "id long, val string")
+    r_df = spark.createDataFrame(
+        [(i + 1000, s) for i, s in rows[30:]], "id long, val string"
+    )
     filt = jaccard_inner_join(
-        purchases, interests, "id", "id", "purchases", "interests",
-        ws, 0.2, with_score=True,
+        l_df, r_df, "id", "id", "val", "val", tok, 0.2, with_score=True,
     )
     assert set(filt.columns) == {"l_id", "r_id", "jaccard"}
+    assert _strategy_of(filt) == strategy
     brute = jaccard_inner_join_brute_force(
-        purchases, interests, "id", "id", "purchases", "interests",
-        ws, 0.2, with_score=True,
+        l_df, r_df, "id", "id", "val", "val", tok, 0.2, with_score=True,
     )
     key = lambda r: (r.l_id, r.r_id)
     fs = {key(r): r.jaccard for r in filt.collect()}
     bs = {key(r): r.jaccard for r in brute.collect()}
     # filtered ⊆ brute with identical scores on the intersection
-    assert set(fs) <= set(bs)
+    assert fs and set(fs) <= set(bs)
     assert all(bs[k] == v for k, v in fs.items())
 
 
@@ -311,15 +348,16 @@ def test_verify_attach_gate_unit(documents, monkeypatch):
     assert J._bitset_verify_cap(64) < J._bitset_verify_cap(4)
 
 
+@pytest.mark.parametrize("path", ["self", "inner"])
 @pytest.mark.parametrize("tok", ["ws", "ws_fast", "qgram"])
-def test_verify_attach_above_gate_fallback(documents, monkeypatch, tok):
+def test_verify_attach_above_gate_fallback(documents, monkeypatch, tok, path):
     """Force the doc/token counts past the broadcast caps and pin the
     fallback: the verification attach joins revert to shuffle joins
     (strictly fewer BroadcastHashJoin nodes, strictly more
     SortMergeJoin nodes in the static plan) and the pair set is
     unchanged — the gate is a pure physical-plan decision. Covers all
     three verification paths: generic pairs×tokens (ws), compiled
-    array-intersect (ws_fast), bitset (qgram).
+    array-intersect (ws_fast), bitset (qgram) — on both joins.
 
     autoBroadcastJoinThreshold is disabled for the comparison: that is
     the 100 TB regime (no side clears the stats threshold), where the
@@ -334,6 +372,17 @@ def test_verify_attach_above_gate_fallback(documents, monkeypatch, tok):
         "ws_fast": WhitespaceTokzr(distinct_rows=True),
         "qgram": QGramsTokzr(3),
     }[tok]
+
+    def join(tokenizer):
+        if path == "self":
+            return jaccard_self_join(
+                documents, "doc_id", "text", tokenizer, 0.5
+            )
+        l = documents.filter(F.col("doc_id") % 2 == 0)
+        r = documents.filter(F.col("doc_id") % 2 == 1)
+        return jaccard_inner_join(
+            l, r, "doc_id", "doc_id", "text", "text", tokenizer, 0.5
+        )
 
     def plan_of(df):
         return df._jdf.queryExecution().executedPlan().toString()
@@ -358,13 +407,13 @@ def test_verify_attach_above_gate_fallback(documents, monkeypatch, tok):
         # sf0.001's small candidate stream — by design; no doc-count
         # floor exists since round 10)
         monkeypatch.setattr(J, "_BROADCAST_VERIFY_MIN_RATIO", 0)
-        gated = jaccard_self_join(documents, "doc_id", "text", tokenizer, 0.5)
+        gated = join(tokenizer)
         gated_plan = plan_of(gated)
         gated_pairs = pairs(gated)
 
         monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_DOCS", 0)
         monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_TOKENS", 0)
-        off = jaccard_self_join(documents, "doc_id", "text", tokenizer, 0.5)
+        off = join(tokenizer)
         off_plan = plan_of(off)
 
         assert pairs(off) == gated_pairs
@@ -379,12 +428,12 @@ def test_verify_attach_above_gate_fallback(documents, monkeypatch, tok):
 
 
 def test_self_gate_stats_formula(spark):
-    """Pin _self_gate_stats against hand-computed values on a 3-doc
-    corpus at t=0.5 (the gate's only inputs): n_docs from pos==1 rows,
-    n_tok from all rows, the candidate bound = sum over tokens of
-    (indexing-prefix rows × probing-prefix rows), and dup_rows (the
-    exact duplicate (id, token) row count, gating the
-    runtime-distinct array verification).
+    """Pin _gate_stats on one token table (the self join's call)
+    against hand-computed values on a 3-doc corpus at t=0.5 (the gate's
+    only inputs): docs from pos==1 rows, token rows from all rows, the
+    candidate bound = sum over tokens of (indexing-prefix rows ×
+    probing-prefix rows), and dup_rows (the exact duplicate (id, token)
+    row count, gating the runtime-distinct array verification).
 
     Corpus: d1 "a b c", d2 "b c", d3 "c a" → df a:2 b:2 c:3; pos by
     (df, token) order. Indexing prefix (len-pos+1 >= 2·len/3): a and b
@@ -400,10 +449,14 @@ def test_self_gate_stats_formula(spark):
     )
     tokens = WhitespaceTokzr().tokenize(df, "id", "val")
     tkdf = J.tokens_with_doc_freq(tokens, with_pair_key=True)
-    assert J._self_gate_stats(tkdf, 0.5) == (3, 7, 8, 0)
+
+    def scalars(g):
+        return g.docs[0], g.toks[0], g.bound[0][0], g.dup_rows
+
+    assert scalars(J._gate_stats([tkdf], 0.5)) == (3, 7, 8, 0)
     # skip_dup (round 12, rows_distinct tokenizers): same gate scalars
     # without the count_distinct column; dup_rows pinned to the known 0
-    assert J._self_gate_stats(tkdf, 0.5, skip_dup=True) == (3, 7, 8, 0)
+    assert scalars(J._gate_stats([tkdf], 0.5, skip_dup=True)) == (3, 7, 8, 0)
 
     dup = spark.createDataFrame(
         [(1, "A a b"), (2, "a b")], "id long, val string"
@@ -412,7 +465,30 @@ def test_self_gate_stats_formula(spark):
         WhitespaceTokzr().tokenize(dup, "id", "val"), with_pair_key=True
     )
     # d1 tokenizes to rows a,a,b (case-collapsed duplicate) → 1 dup row
-    assert J._self_gate_stats(dup_tkdf, 0.5)[3] == 1
+    assert J._gate_stats([dup_tkdf], 0.5).dup_rows == 1
+
+
+def test_two_sided_gate_stats_formula(spark):
+    """_gate_stats on two tables (the inner join's call): scalars per
+    side, candidate bounds for both orientations, widow counts. Left:
+    the 3-doc table of test_self_gate_stats_formula; right: its d3
+    rows alone (same df column). Per token, indexing rows a / probing
+    rows b — left a = a:2 b:2 c:0, b = a:2 b:2 c:2; right (d3 "c a",
+    pos a=1 c=2) a = a:1, b = a:1 c:1. bound[l][r] = a:2·1 + c:0·1 = 2,
+    bound[r][l] = a:1·2 = 2, bound[l][l] = 8, bound[r][r] = 1.
+    ``widow_df`` marks the df of one-sided tokens; passing 2 marks a
+    and b, so widows = indexing rows of a and b: left 4, right 1."""
+    import jaccard_join_duckdb_spark.operators.jaccard as J
+    from jaccard_join_duckdb_spark import WhitespaceTokzr
+
+    df = spark.createDataFrame(
+        [(1, "a b c"), (2, "b c"), (3, "c a")], "id long, val string"
+    )
+    tkdf = J.tokens_with_doc_freq(WhitespaceTokzr().tokenize(df, "id", "val"))
+    g = J._gate_stats([tkdf, tkdf.filter("id = 3")], 0.5, widow_df=2)
+    assert (g.docs, g.toks, g.widows) == ((3, 1), (7, 2), (4, 1))
+    assert g.bound == ((8, 2), (2, 1))
+    assert g.dup_rows == 0
 
 
 def _lowercase_corpus(n_docs=60, max_words=12, seed=11):

@@ -512,3 +512,34 @@ def test_get_spark_xms_opt_out(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_XMS", "0")
     S.get_spark()
     assert "spark.driver.extraJavaOptions" not in captured
+
+
+def test_get_spark_default_heap_fits_physical_memory(monkeypatch):
+    """Without SPARK_GRAFT_DRIVER_MEM the default heap is half of
+    physical memory (capped at 48g): the -Xms pin commits the whole
+    heap, so a default above physical memory cannot launch the JVM."""
+    import jaccard_join_duckdb_spark.session as S
+
+    captured = {}
+
+    class FakeBuilder:
+        def appName(self, *_): return self
+        def master(self, *_): return self
+        def config(self, k, v):
+            captured[k] = v
+            return self
+        def getOrCreate(self): return None
+
+    monkeypatch.setattr(
+        S.SparkSession, "builder", FakeBuilder(), raising=False
+    )
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_XMS", raising=False)
+    S.get_spark()
+    mem = captured["spark.driver.memory"]
+    assert mem.endswith("m")
+    heap = int(mem[:-1]) << 20
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    assert 0 < heap <= phys // 2
+    assert heap <= 48 << 30
+    assert f"-Xms{mem}" in captured["spark.driver.extraJavaOptions"]

@@ -11,12 +11,14 @@ materializing the pipeline at each internal boundary, reusing the
 previous boundary's persisted frame so each delta is one stage's wall:
 
   1. tokenize     — tokenizer chain, persisted, count()
-  2. dfreq+stats  — groupBy(token).count + the fused decision aggregate
-  3. tkdf         — tokens_with_doc_freq(dfreq=...) persisted, count()
-  4. gate stats   — _self_gate_stats (the exact candidate-bound job),
+  2. dfreq+stats  — groupBy(token).count + _plan_from_dfreq's aggregate
+  3. tkdf         — _token_table(dfreq=...) persisted, count()
+  4. gate stats   — _gate_stats (the exact candidate-bound job),
                     or 0 when the sparse fast-decline skips it
-  5. candidates   — prefix-filtered token equi-join + pair groupBy
-  6. verify       — attaches + suffix overlap to the final pair count
+  5. candidates   — _candidates: prefix-filtered token equi-join +
+                    pair groupBy
+  6. verify       — _verify: attaches + suffix overlap to the final
+                    pair count
 
 plus `one_shot`: the unsegmented public-API wall (same session, same
 warm cache discipline as tools/ref_scale_bench.py), and `job_floor`:
@@ -103,6 +105,8 @@ def main() -> int:
     w_one_shot = _best(one_shot, n)
 
     # --- segmented walls (min over n full segmented runs) ---
+    # The join's own stages (operators/jaccard.py), materialized one
+    # at a time: same helpers, same arguments as jaccard_self_join.
     stages: dict[str, list[float]] = {}
     out_rows = 0
     for _ in range(n):
@@ -115,25 +119,11 @@ def main() -> int:
         dfreq = tokens.groupBy("token").agg(
             F.count(F.lit(1)).alias("df")
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        row = dfreq.agg(
-            F.count(F.lit(1)).alias("v"),
-            F.sum("df").alias("ntok"),
-            F.max("df").alias("m"),
-            F.sum((F.col("df") * F.col("df")).cast("double")).alias("sq"),
-        ).first()
+        stats, n_words, _ = J._plan_from_dfreq(
+            dfreq, ("df",), tok.rows_distinct, None, 0
+        )
         t2 = time.monotonic()
-        vocab_n = int(row["v"] or 0)
-        sumsq = float(row["sq"] or 0.0)
-        n_tok_total = int(row["ntok"] or 0)
-        bitset = tok.rows_distinct and 0 < vocab_n <= J._MAX_BITSET_VOCAB
-        if bitset:
-            tkdf = J._tokens_with_tid(tokens, dfreq=dfreq)
-        else:
-            tkdf = J.tokens_with_doc_freq(
-                tokens, with_pair_key=True, hot_df_threshold=None,
-                dfreq=dfreq,
-            )
-        if bitset:
+        if n_words:
             print(json.dumps({
                 "metric": "cell_profile", "error":
                 "profiler segments the array and generic verify "
@@ -141,123 +131,34 @@ def main() -> int:
             }))
             spark.stop()
             return 0
-        tkdf = tkdf.persist(StorageLevel.MEMORY_AND_DISK)
+        tkdf = J._token_table(tokens, dfreq, pair_key=True).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         tkdf.count()
         t3 = time.monotonic()
-        cheap_decline = sumsq < J._BROADCAST_VERIFY_MIN_RATIO * max(
-            n_tok_total, 1
+        cheap_decline = stats["sumsq"] < J._BROADCAST_VERIFY_MIN_RATIO * max(
+            stats["n_tok"], 1
         )
-        n_docs = n_tok = bound = 0
-        dup_rows = -1
+        side, bound, dup_rows = J._Side(tkdf, 0, 0), 0, -1
         if not cheap_decline:
-            n_docs, n_tok, bound, dup_rows = J._self_gate_stats(tkdf, t)
+            g = J._gate_stats([tkdf], t, skip_dup=tok.rows_distinct)
+            side = J._Side(tkdf, g.docs[0], g.toks[0])
+            bound, dup_rows = g.bound[0][0], g.dup_rows
         t4 = time.monotonic()
-        Lp = tkdf.filter(
-            J._indexing_prefix_cond(F.col("len"), F.col("pos"), t)
-        ).alias("L")
-        Rp = tkdf.filter(
-            J._probing_prefix_cond(F.col("len"), F.col("pos"), t)
-        ).alias("R")
-        cond = (
-            (F.col("L.token") == F.col("R.token"))
-            & (F.col("L.l_id") < F.col("R.l_id"))
-            & J._length_cond(F.col("L.len"), F.col("R.len"), t)
-            & J._positional_cond(
-                F.col("L.len"), F.col("L.pos"),
-                F.col("R.len"), F.col("R.pos"), t,
-            )
-        )
-        cand = (
-            Lp.join(Rp, cond)
-            .groupBy(
-                F.col("L.id").alias("lid"), F.col("R.id").alias("rid")
-            )
-            .agg(
-                F.max("L.pos").alias("lmaxpos"),
-                F.max("R.pos").alias("rmaxpos"),
-                F.count(F.lit(1)).alias("pfxoverlap"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        cand = J._candidates(
+            tkdf, tkdf,
+            (F.col("R.l_id") < F.col("S.l_id"))
+            & J._length_cond(F.col("R.len"), F.col("S.len"), t),
+            t, "pos",
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         n_cand = cand.count()
         t5 = time.monotonic()
-        if not tok.rows_distinct and dup_rows != 0:
-            # Generic verify: the reference's pairs×tokens three-way
-            # join (jaccard_self_join's last branch, same attach gate
-            # arguments; no lens attach — the remaining-suffix
-            # pre-filter is provably vacuous, see _positional_cond).
-            Lv = tkdf.alias("VL")
-            Rv = tkdf.alias("VR")
-            out = (
-                cand.join(
-                    J._verify_attach(Lv, n_tok, token_level=True,
-                                     bound=bound),
-                    F.col("lid") == F.col("VL.id"),
-                )
-                .join(
-                    J._verify_attach(Rv, n_tok, token_level=True,
-                                     bound=bound),
-                    (F.col("rid") == F.col("VR.id"))
-                    & (F.col("VL.token") == F.col("VR.token"))
-                    & (F.col("VL.pos") >= F.col("lmaxpos"))
-                    & (F.col("VR.pos") >= F.col("rmaxpos")),
-                )
-                .groupBy(
-                    "lid", "rid", F.col("VL.len").alias("llen"),
-                    F.col("VR.len").alias("rlen"), "pfxoverlap",
-                )
-                .agg(F.count(F.lit(1)).alias("sfx"))
-                .filter(
-                    J._overlap_cond(
-                        F.col("sfx") + F.col("pfxoverlap") - 1,
-                        F.col("llen"), F.col("rlen"), t,
-                    )
-                )
-            )
-            out_rows = out.count()
-            t6 = time.monotonic()
-            for name, w in [
-                ("tokenize", t1 - t0), ("dfreq_stats", t2 - t1),
-                ("tkdf", t3 - t2), ("gate_stats", t4 - t3),
-                ("candidates", t5 - t4), ("verify", t6 - t5),
-            ]:
-                stages.setdefault(name, []).append(w)
-            meta = {
-                "vocab_n": vocab_n, "bitset": bitset, "path": "generic",
-                "n_tok": n_tok_total, "sumsq": sumsq,
-                "cheap_decline": cheap_decline, "bound": bound,
-                "ratio": round(bound / max(n_tok, 1), 2) if bound else None,
-                "n_cand": n_cand,
-            }
-            spark.catalog.clearCache()
-            continue
-        arrs = J._pos_token_arrays(tkdf)
-        out = (
-            cand.join(
-                J._verify_attach(arrs.select(
-                    F.col("id").alias("lid"),
-                    F.col("len").alias("llen"),
-                    F.col("arr").alias("la"),
-                ), n_docs, bound=bound, decide_rows=n_tok), "lid")
-            .join(
-                J._verify_attach(arrs.select(
-                    F.col("id").alias("rid"),
-                    F.col("len").alias("rlen"),
-                    F.col("arr").alias("ra"),
-                ), n_docs, bound=bound, decide_rows=n_tok), "rid")
-            .withColumn("sfx", J._suffix_overlap(
-                F.col("la"), F.col("llen"), F.col("lmaxpos"),
-                F.col("ra"), F.col("rlen"), F.col("rmaxpos"),
-            ))
-            .filter(
-                (F.col("sfx") >= 1)
-                & J._overlap_cond(
-                    F.col("sfx") + F.col("pfxoverlap") - 1,
-                    F.col("llen"), F.col("rlen"), t,
-                )
-            )
+        array_ok = tok.rows_distinct or (
+            J._RUNTIME_DISTINCT_ARRAY and dup_rows == 0
         )
-        out_rows = out.count()
+        out_rows = J._verify(
+            cand, side, side, t, n_words=0, array_ok=array_ok, bound=bound
+        ).count()
         t6 = time.monotonic()
         for name, w in [
             ("tokenize", t1 - t0), ("dfreq_stats", t2 - t1),
@@ -265,12 +166,15 @@ def main() -> int:
             ("candidates", t5 - t4), ("verify", t6 - t5),
         ]:
             stages.setdefault(name, []).append(w)
+        if not array_ok:
+            path = "generic"
+        else:
+            path = "array" if tok.rows_distinct else "array-runtime"
         meta = {
-            "vocab_n": vocab_n, "bitset": bitset,
-            "path": "array" if tok.rows_distinct else "array-runtime",
-            "n_tok": n_tok_total, "sumsq": sumsq,
+            "vocab_n": stats["vocab"], "bitset": False, "path": path,
+            "n_tok": stats["n_tok"], "sumsq": stats["sumsq"],
             "cheap_decline": cheap_decline, "bound": bound,
-            "ratio": round(bound / max(n_tok, 1), 2) if bound else None,
+            "ratio": round(bound / max(side.toks, 1), 2) if bound else None,
             "n_cand": n_cand,
         }
         spark.catalog.clearCache()

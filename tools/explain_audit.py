@@ -59,7 +59,7 @@ SINGLE_OK: set = set()
 # for every query: a partial HashAggregate's final merge is
 # scalar-sized by construction.)
 SINGLE_CACHE_OK = {
-    # Self-join bitset path: the tid ranking (_tokens_with_tid)
+    # Self-join bitset path: the tid ranking (_token_table)
     # windows the PERSISTED dfreq — verified in the plan text: the
     # exchange input is the [token, df] vocabulary dim out of the
     # dfreq HashAggregate's cache, taken only after the runtime gate
